@@ -3,6 +3,7 @@ package graft.app
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.MatchPipeline
 import graft.schema.EmployeeNormalizer
+import graft.util.Cp
 
 /**
  * Thin CLI driver for the flagship match pipeline — the engine's equivalent
@@ -41,7 +42,9 @@ object MatchCli {
     require(lowered.columns.contains("username"),
       "usernames CSV must contain a 'username' column (main.py:153)")
 
-    val out = MatchPipeline.matchOutput(lowered.select("username"), employees)
+    // stored once (at most U x k rows): the write and the row count both
+    // read it, so the scored cross join runs once per invocation
+    val out = Cp.ser(MatchPipeline.matchOutput(lowered.select("username"), employees))
     MatchPipeline.writeCsv(out, outDir, separators, singleFile = singleFile)
     println(s"[match] wrote ${out.count()} rows to $outDir")
     spark.stop()

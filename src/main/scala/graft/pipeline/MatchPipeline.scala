@@ -1,9 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.scoring.MatchScore
+import graft.util.Cp
 
 /**
  * The end-to-end username->employee match pipeline — the engine's flagship
@@ -53,6 +57,99 @@ object MatchPipeline {
     MatchScore.employeeInvariants(col("first_name"), col("last_name"), col("employee_name"))
       .foldLeft(employees) { case (df, (name, c)) => df.withColumn(name, c) }
 
+  /** The exact path's roster side: every frame the scoring joins read from
+    * the roster, and nothing that depends on a username.
+    *  - `names`: the DISTINCT (first, last, full) name tuples with their
+    *    hoisted scoring invariants (`n_*` columns) — the broadcast build
+    *    side of the scoring cross join;
+    *  - `fanout`: the [[prepareEmployees]] rows the scored name tuples fan
+    *    back out to, capped at `fanoutTopK` rows per tuple for top-k
+    *    consumers (`None` keeps every row);
+    *  - `probe`: a frame that is empty exactly when the roster is — the
+    *    empty-roster sentinel branch of [[matchOutput]] reads one row of it.
+    * [[prepareRoster]] builds them lazily, so a batch plan still reads the
+    * roster through its own lineage and plans exactly as one inline query
+    * would; [[stored]] materializes them once for callers that score many
+    * username batches against one roster ([[graft.streaming.MatchServing]]). */
+  final class PreparedRoster private[pipeline] (
+      val names: DataFrame, val fanout: DataFrame, val probe: DataFrame,
+      val fanoutTopK: Option[Int], blocks: Seq[RDD[_]]) {
+    /** This roster with `names` and `fanout` materialized by [[Cp.ser]]:
+      * eager, serialized, and held as checkpointed RDD blocks rather than in
+      * the session's CacheManager, so no other query's plan can pick them
+      * up. `fanout` keeps only the columns the top-k output reads. The
+      * probe's answer is fixed once stored, so it becomes a local 0/1-row
+      * frame: a batch's sentinel branch then scans a constant instead of
+      * the stored rows (one job fewer per serving batch, measured on the
+      * wide bench roster; an empty probe removes that branch's join). The
+      * blocks stay until [[release]]. */
+    def stored(): PreparedRoster = {
+      val n = Cp.ser(names)
+      val f = Cp.ser(fanout.select("e_first", "e_last", "e_full", "emp_id", "employee_name"))
+      val rdds = Seq(n, f).map(_.queryExecution.logical).collect { case r: LogicalRDD => r.rdd }
+      val p = f.sparkSession.createDataFrame(
+        java.util.Collections.nCopies(if (f.isEmpty) 0 else 1, Row(1)),
+        StructType(Seq(StructField("one", IntegerType))))
+      new PreparedRoster(n, f, p, fanoutTopK, rdds)
+    }
+
+    /** Frees the blocks of a [[stored]] roster (a no-op on a lazy one); the
+      * stored frames must not be read afterwards. */
+    def release(): Unit = blocks.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Builds the exact path's roster side lazily — see [[PreparedRoster]]. */
+  def prepareRoster(employees: DataFrame, fanoutTopK: Option[Int]): PreparedRoster = {
+    val e = prepareEmployees(employees)
+    // DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
+    // algorithm"): the score is a pure function of (username, e_first,
+    // e_last, e_full) — emp_id never enters it — so the expensive kernels
+    // run once per (username, DISTINCT name tuple) and a broadcast hash
+    // join fans the scored rows back out to that name's employees. On the
+    // bench's 64-name/20k-employee roster this is ~300x fewer kernel
+    // evaluations (measured nm_match_topk 30.8 -> see OPTIMIZATION_r20.md);
+    // on a high-cardinality roster (distinct ~ |E|) the overhead is one
+    // roster-sized distinct plus one extra broadcast probe per pair — noise
+    // next to the kernels. Scale shape is unchanged: the username side
+    // still crosses ONE BroadcastNestedLoopJoin and one BroadcastHashJoin,
+    // never an exchange; both broadcast builds are roster-bounded.
+    // n_* aliases keep the distinct side's attribute ids disjoint from
+    // `e`'s, so the fan-out join is not an ambiguous self join.
+    val eKeys = e.select(col("e_first").as("n_first"), col("e_last").as("n_last"),
+      col("e_full").as("n_full")).distinct()
+    // invariants recomputed on the distinct tuples: lower/trim are
+    // idempotent, so codes from the re-normalized strings are identical
+    val eNames = MatchScore.employeeInvariants(
+        col("n_first"), col("n_last"), col("n_full"))
+      .foldLeft(eKeys) { case (df, (name, c)) =>
+        df.withColumn(name.replaceFirst("^e_", "n_"), c) }
+    // FAN-OUT PRUNE (r20, top-k callers only): every employee of a name
+    // tuple shares that tuple's score, so within one username's
+    // (score desc, emp_id asc, employee_name asc) total order the k-th
+    // best row OF A TUPLE is preceded by k-1 same-score rows of that same
+    // tuple — an employee ranked > k inside its tuple can therefore never
+    // reach any username's global top-k. Keeping only each tuple's k
+    // smallest (emp_id, employee_name) rows is EXACT for top-k
+    // consumption and shrinks the window input from U*E rows to at most
+    // U*D*k (the bench's 64-name roster: 4.16M -> 53k rows). The window
+    // runs on the broadcast-small roster once, NOT per pair. Duplicate
+    // (emp_id, employee_name) rows within a tuple are interchangeable in
+    // every column the top-k output can reference, so row_number's
+    // arbitrary order among them cannot change the result.
+    val eFan = fanoutTopK match {
+      case None => e
+      case Some(k) =>
+        val byName = Window.partitionBy(col("e_first"), col("e_last"), col("e_full"))
+          .orderBy(col("emp_id").asc, col("employee_name").asc)
+        e.withColumn("__fan_rk", row_number().over(byName))
+          .filter(col("__fan_rk") <= k)
+          .drop("__fan_rk")
+    }
+    // the probe reads `e`, not `eFan`: a limit over `e` column-prunes to
+    // the raw roster scan, while one over `eFan` would keep its window
+    new PreparedRoster(eNames, eFan, e, fanoutTopK, Nil)
+  }
+
   /** Scored candidate pairs: every (username, employee) with its score.
     *
     * The cross join is COMPUTE-bound, not IO-bound: each stream row fans out
@@ -73,13 +170,12 @@ object MatchPipeline {
     * explicit numPartitions repartition is never AQE-coalesced, so the
     * small-input fix cannot regress. */
   def scoredPairs(usernames: DataFrame, employees: DataFrame): DataFrame =
-    scoredPairsCapped(usernames, employees, None)
+    scoredPairsCapped(usernames, prepareRoster(employees, None))
 
-  /** [[scoredPairs]] with an optional per-name-tuple cap on the fan-out
-    * roster — the private form [[rankedTopK]] consumes (see the FAN-OUT
-    * PRUNE comment inside). `fanoutTopK = None` is the full pair relation. */
-  private def scoredPairsCapped(usernames: DataFrame, employees: DataFrame,
-                                fanoutTopK: Option[Int]): DataFrame = {
+  /** [[scoredPairs]] against a [[PreparedRoster]] — the private form
+    * [[rankedTopK]] consumes with a fan-out-capped roster. Builds only the
+    * username side; every roster-side frame comes from `roster`. */
+  private def scoredPairsCapped(usernames: DataFrame, roster: PreparedRoster): DataFrame = {
     val spark = usernames.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
     // static planned partition count: queryExecution.sparkPlan is the
@@ -111,30 +207,7 @@ object MatchPipeline {
       if (planned >= 2 * parallelism && !aqeCollapsible) usernames
       else usernames.repartition(4 * parallelism)
     val u = prepareUsernames(stream)
-    val e = prepareEmployees(employees)
-    // DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
-    // algorithm"): the score is a pure function of (username, e_first,
-    // e_last, e_full) — emp_id never enters it — so the expensive kernels
-    // run once per (username, DISTINCT name tuple) and a broadcast hash
-    // join fans the scored rows back out to that name's employees. On the
-    // bench's 64-name/20k-employee roster this is ~300x fewer kernel
-    // evaluations (measured nm_match_topk 30.8 -> see OPTIMIZATION_r20.md);
-    // on a high-cardinality roster (distinct ~ |E|) the overhead is one
-    // roster-sized distinct plus one extra broadcast probe per pair — noise
-    // next to the kernels. Scale shape is unchanged: the username side
-    // still crosses ONE BroadcastNestedLoopJoin and one BroadcastHashJoin,
-    // never an exchange; both broadcast builds are roster-bounded.
-    // n_* aliases keep the distinct side's attribute ids disjoint from
-    // `e`'s, so the fan-out join is not an ambiguous self join.
-    val eKeys = e.select(col("e_first").as("n_first"), col("e_last").as("n_last"),
-      col("e_full").as("n_full")).distinct()
-    // invariants recomputed on the distinct tuples: lower/trim are
-    // idempotent, so codes from the re-normalized strings are identical
-    val eNames = MatchScore.employeeInvariants(
-        col("n_first"), col("n_last"), col("n_full"))
-      .foldLeft(eKeys) { case (df, (name, c)) =>
-        df.withColumn(name.replaceFirst("^e_", "n_"), c) }
-    val scoredNames = u.crossJoin(broadcast(eNames))
+    val scoredNames = u.crossJoin(broadcast(roster.names))
       .withColumn("score",
         MatchScore.scoreFromInvariants(
           col("u_norm"), col("u_part1"), col("u_part2"), col("u_sdx"), col("u_mp"),
@@ -147,32 +220,10 @@ object MatchPipeline {
       .select(col("username"), col("u_norm"), col("u_part1"), col("u_part2"),
         col("u_sdx"), col("u_mp"), col("u_initial"), col("u_dot2_initial"),
         col("n_first"), col("n_last"), col("n_full"), col("score"))
-    // FAN-OUT PRUNE (r20, top-k callers only): every employee of a name
-    // tuple shares that tuple's score, so within one username's
-    // (score desc, emp_id asc, employee_name asc) total order the k-th
-    // best row OF A TUPLE is preceded by k-1 same-score rows of that same
-    // tuple — an employee ranked > k inside its tuple can therefore never
-    // reach any username's global top-k. Keeping only each tuple's k
-    // smallest (emp_id, employee_name) rows is EXACT for top-k
-    // consumption and shrinks the window input from U*E rows to at most
-    // U*D*k (the bench's 64-name roster: 4.16M -> 53k rows). The window
-    // runs on the broadcast-small roster once, NOT per pair. Duplicate
-    // (emp_id, employee_name) rows within a tuple are interchangeable in
-    // every column the top-k output can reference, so row_number's
-    // arbitrary order among them cannot change the result.
-    val eFan = fanoutTopK match {
-      case None => e
-      case Some(k) =>
-        val byName = Window.partitionBy(col("e_first"), col("e_last"), col("e_full"))
-          .orderBy(col("emp_id").asc, col("employee_name").asc)
-        e.withColumn("__fan_rk", row_number().over(byName))
-          .filter(col("__fan_rk") <= k)
-          .drop("__fan_rk")
-    }
     // fan back out: null-safe keys so a null-named employee keeps pairing
     // with every username (score 0 via null propagation), exactly as the
     // direct cross join did
-    scoredNames.join(broadcast(eFan),
+    scoredNames.join(broadcast(roster.fanout),
         col("n_first") <=> col("e_first") && col("n_last") <=> col("e_last") &&
           col("n_full") <=> col("e_full"))
       .drop("n_first", "n_last", "n_full")
@@ -185,8 +236,11 @@ object MatchPipeline {
     * not de-duplicate a common subplan across union/join branches).
     * Sub-threshold rows sort after qualifying ones, so their presence cannot
     * change a qualifying row's dense rank. */
-  private def rankedTopK(usernames: DataFrame, employees: DataFrame, topK: Int): DataFrame =
-    rankedTopKOf(scoredPairsCapped(usernames, employees, Some(topK)), topK)
+  private def rankedTopK(usernames: DataFrame, roster: PreparedRoster, topK: Int): DataFrame = {
+    require(roster.fanoutTopK.forall(_ >= topK),
+      s"roster fan-out capped at ${roster.fanoutTopK.get} rows per name, below topK = $topK")
+    rankedTopKOf(scoredPairsCapped(usernames, roster), topK)
+  }
 
   /** Per-username top-k of a scored (username, emp_id, employee_name,
     * score) frame via the bounded-heap aggregate [[graft.functions.topk_match]]
@@ -226,7 +280,8 @@ object MatchPipeline {
   /** Top-k >= threshold matches per username, dense-rank labeled. */
   def rankedMatches(usernames: DataFrame, employees: DataFrame,
                     topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame =
-    rankedTopK(usernames, employees, topK).filter(col("score") >= threshold)
+    rankedTopK(usernames, prepareRoster(employees, Some(topK)), topK)
+      .filter(col("score") >= threshold)
 
   /**
    * Full output contract of the reference (username, emp_id, emp_name,
@@ -246,14 +301,20 @@ object MatchPipeline {
    * raw input. Pinned by MatchPipelineSpec ("duplicate usernames").
    */
   def matchOutput(usernames: DataFrame, employees: DataFrame,
-                  topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame = {
+                  topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame =
+    matchOutputOf(usernames, prepareRoster(employees, Some(topK)), topK, threshold)
+
+  /** [[matchOutput]] scored against an already prepared roster, whose
+    * fan-out cap must be at least `topK`. */
+  def matchOutputOf(usernames: DataFrame, roster: PreparedRoster,
+                    topK: Int, threshold: Double): DataFrame = {
     val users = usernames
       .select(col("username").cast("string").as("username")).distinct()
     // Single pass over the scored top-k: a username whose BEST candidate
     // (rn=1) is below threshold has no qualifying match at all, so its rn=1
     // row becomes the USER NOT FOUND sentinel in the same projection.
     val qualifies = col("score") >= threshold
-    val fromPairs = rankedTopK(users, employees, topK)
+    val fromPairs = rankedTopK(users, roster, topK)
       .filter(qualifies || col("rn") === 1)
       .select(
         col("username"),
@@ -262,10 +323,10 @@ object MatchPipeline {
         when(qualifies, format_string("%.2f%%", col("score"))).otherwise("0.00%").as("confidence_score"),
         when(qualifies, col("match_type")).otherwise("USER NOT FOUND").as("match_type"))
     // Empty-roster edge: the cross join then emits NOTHING, so every
-    // username needs a sentinel. The anti-join probe is against roster
-    // .limit(1) — O(1), never the scored pairs.
+    // username needs a sentinel. The anti-join probe is against the
+    // prepared roster's probe .limit(1) — O(1), never the scored pairs.
     val emptyRosterSentinels = users
-      .join(broadcast(employees.limit(1).select(lit(1).as("__probe"))),
+      .join(broadcast(roster.probe.limit(1).select(lit(1).as("__probe"))),
         lit(true), "left_anti")
       .select(
         col("username"),

@@ -16,8 +16,8 @@ class GoldenMatchSpec extends AnyFunSuite {
 
   test("reference workload reproduces the golden output exactly") {
     val employees = EmployeeNormalizer.normalize(
-      spark.read.option("header", "true").csv("/root/reference/employee.csv"))
-    val usernames = spark.read.option("header", "true").csv("/root/reference/usernames.csv")
+      spark.read.option("header", "true").csv(SparkTestBase.referenceCsv("employee.csv")))
+    val usernames = spark.read.option("header", "true").csv(SparkTestBase.referenceCsv("usernames.csv"))
     val out = MatchPipeline.matchOutput(usernames.select("username"), employees)
       .select(concat_ws(",", col("username"), col("emp_id"), col("emp_name"),
         col("confidence_score"), col("match_type")).as("line"))

@@ -15,9 +15,9 @@ class MatchBlockingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val employees = EmployeeNormalizer.normalize(
-    spark.read.option("header", "true").csv("/root/reference/employee.csv"))
+    spark.read.option("header", "true").csv(SparkTestBase.referenceCsv("employee.csv")))
   private lazy val usernames = spark.read.option("header", "true")
-    .csv("/root/reference/usernames.csv").select("username")
+    .csv(SparkTestBase.referenceCsv("usernames.csv")).select("username")
 
   private def foundPairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     df.filter(col("match_type") =!= "USER NOT FOUND")

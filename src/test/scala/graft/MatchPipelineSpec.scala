@@ -6,15 +6,16 @@ import graft.pipeline.MatchPipeline
 import graft.schema.EmployeeNormalizer
 
 /** End-to-end match pipeline against the reference's own fixture CSVs
-  * (/root/reference/employee.csv x usernames.csv — read-only data inputs). */
+  * (employee.csv x usernames.csv, vendored under test resources — see
+  * [[SparkTestBase.referenceCsv]]). */
 class MatchPipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   lazy val employees = EmployeeNormalizer.normalize(
-    spark.read.option("header", "true").csv("/root/reference/employee.csv"))
+    spark.read.option("header", "true").csv(SparkTestBase.referenceCsv("employee.csv")))
   lazy val usernames =
-    spark.read.option("header", "true").csv("/root/reference/usernames.csv")
+    spark.read.option("header", "true").csv(SparkTestBase.referenceCsv("usernames.csv"))
 
   test("normalizer canonicalizes the reference roster") {
     assert(employees.columns.toSeq ===

@@ -19,6 +19,12 @@ object SparkTestBase {
     graft.functions.registerAll(s)
     s
   }
+  /** Filesystem path of a reference-workload input CSV (`employee.csv`,
+    * `usernames.csv`) vendored under test resources `reference/` — both
+    * rebuilt from fixtures/match_golden.csv by tools/gen_reference_csvs.py. */
+  def referenceCsv(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/reference/$name").toURI).toString
+
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"

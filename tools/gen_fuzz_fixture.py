@@ -568,9 +568,9 @@ def gen_match_synth_gz(sf_dir, out_gz: str, workload=synth_workload) -> None:
 # ---------------------------------------------------------------- generate
 
 def main() -> None:
-    with open("/root/reference/usernames.csv") as f:
+    with open("src/test/resources/reference/usernames.csv") as f:
         usernames = [r["username"] for r in csv.DictReader(f)]
-    with open("/root/reference/employee.csv") as f:
+    with open("src/test/resources/reference/employee.csv") as f:
         emp_rows = [(r["EMP_ID"], r["First_Name"], r["Last_Name"])
                     for r in csv.DictReader(f)]
     employees = [f"{fn} {ln}" for _, fn, ln in emp_rows]
